@@ -722,7 +722,8 @@ def scc(
 
     EXACT SCC (run-to-convergence, not fixed-round): the eval-scale
     oracle computes the same object independently via transitive
-    closure, so no lockstep construction is needed.
+    closure, so no lockstep construction is needed.  Self-loops are
+    dropped, so a node whose only edges are self-loops does not appear.
     """
     obs_e = Observation()
     e = (
@@ -751,47 +752,6 @@ def scc(
     # sets rides the materialization jobs as observed counts — the
     # former per-round isEmpty() probe jobs are gone (round-7).
     parts = [active.limit(0).select("node", F.col("node").alias("scc_id"))]
-    # size the coloring rounds' shuffles from the observed edge count
-    # (same scoped discipline as cc.connected_components): label
-    # propagation is narrow integer/string rows of trivial per-row
-    # cost, so byte/row-floor sizing beats one-partition-per-core
-    spark = edges.sparkSession
-    old_p = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_iter_parts(n_e, spark.sparkContext.defaultParallelism)),
-    )
-    try:
-        drained, n_active = _scc_loop(
-            e, active, parts, n_e, n_active, max_outer, max_inner
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_p)
-    if not drained and n_active > 0:
-        # ADVICE r5: nodes still active when the outer loop exhausts
-        # must never be silently omitted from the assignment
-        raise RuntimeError(
-            f"scc did not assign every node within max_outer={max_outer} "
-            f"rounds; raise max_outer"
-        )
-    assigned = parts[0]
-    for part in parts[1:]:
-        assigned = assigned.unionByName(part)
-    return assigned
-
-
-def _scc_loop(
-    e: DataFrame,
-    active: DataFrame,
-    parts: list,
-    n_e: int,
-    n_active: int,
-    max_outer: int,
-    max_inner: int,
-) -> tuple[bool, int]:
-    """The scc() outer loop, split out so the caller can scope the
-    shuffle-partition override with try/finally around it.  Appends
-    settled frames to ``parts``; returns (drained, n_active)."""
     drained = False
     for _ in range(max_outer):
         if n_active == 0:
@@ -870,7 +830,17 @@ def _scc_loop(
             .localCheckpoint(eager=True)
         )
         n_e = int(obs_ne.get["n"])
-    return drained, n_active
+    if not drained and n_active > 0:
+        # ADVICE r5: nodes still active when the outer loop exhausts
+        # must never be silently omitted from the assignment
+        raise RuntimeError(
+            f"scc did not assign every node within max_outer={max_outer} "
+            f"rounds; raise max_outer"
+        )
+    assigned = parts[0]
+    for part in parts[1:]:
+        assigned = assigned.unionByName(part)
+    return assigned
 
 
 def label_propagation(
@@ -1054,7 +1024,12 @@ def hits(
     # from the observation — broadcast while the built relation stays
     # small (~250k rows ≈ 16 MB framed), shuffle join beyond that.
     # Measured 2x on the eval graph; join strategy, not results.
-    small_v = int(obs_n.get["n"]) < 250_000
+    n_nodes = int(obs_n.get["n"])
+    if n_nodes == 0:
+        e.unpersist()
+        zero = F.lit(0).cast("long")
+        return nodes.select("node", zero.alias("hub_q"), zero.alias("auth_q"))
+    small_v = n_nodes < 250_000
 
     def _maybe_b(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small_v else df
@@ -1070,9 +1045,9 @@ def hits(
         # aggregation subtree TWICE per half-step (Spark does not
         # dedupe common subtrees, guide §7.2).
         obs = Observation()
-        mat = raw.observe(obs, F.sum("raw").alias("tot")).localCheckpoint(
-            eager=True
-        )
+        mat = raw.observe(
+            obs, F.coalesce(F.sum("raw"), F.lit(0)).alias("tot")
+        ).localCheckpoint(eager=True)
         tot = int(obs.get["tot"])
         return _maybe_b(
             mat.select(

@@ -20,7 +20,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
@@ -171,6 +171,36 @@ def with_signatures(
     return mentions.withColumn("sig", sig(F.col("norm")))
 
 
+def _banded(signed: DataFrame, bands: int, k: int) -> DataFrame:
+    """One row per (mention, LSH band): ``k // bands`` signature slots
+    hashed into ``band_hash``; rows without a signature drop out."""
+    rows_per_band = k // bands
+    return signed.filter(F.col("sig").isNotNull()).select(
+        "mention_id",
+        "norm",
+        "sig",
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(bands - 1)),
+                lambda b: F.hash(F.slice("sig", b * rows_per_band + 1, rows_per_band)),
+            )
+        ).alias("band_id", "band_hash"),
+    )
+
+
+def _sig_agreement(sig_a: str, sig_b: str, k: int) -> Column:
+    """Signature-estimated Jaccard: share of the ``k`` MinHash slots on
+    which the two signatures agree."""
+    return (
+        F.aggregate(
+            F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
+            F.lit(0),
+            lambda acc, v: acc + v,
+        )
+        / F.lit(k)
+    )
+
+
 def candidate_pairs(
     signed: DataFrame,
     bands: int = LSH_BANDS,
@@ -182,18 +212,7 @@ def candidate_pairs(
     Returns (a, b, norm_a, norm_b, score) with a < b.  All JVM-side:
     band hashes via slice+hash, similarity via zip_with/aggregate.
     """
-    rows_per_band = k // bands
-    banded = signed.filter(F.col("sig").isNotNull()).select(
-        "mention_id",
-        "norm",
-        "sig",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.hash(F.slice("sig", b * rows_per_band + 1, rows_per_band)),
-            )
-        ).alias("band_id", "band_hash"),
-    )
+    banded = _banded(signed, bands, k)
     # shuffle-hash, never broadcast: both sides descend from a Python UDF
     # whose cardinality Catalyst can't estimate — left alone, AQE guesses
     # "tiny" and broadcasts hundreds of MB of signatures (observed: 1 GB
@@ -220,14 +239,7 @@ def candidate_pairs(
             F.col("r.mention_id").alias("b"),
             F.col("l.norm").alias("norm_a"),
             F.col("r.norm").alias("norm_b"),
-            (
-                F.aggregate(
-                    F.zip_with("l.sig", "r.sig", lambda x, y: (x == y).cast("int")),
-                    F.lit(0),
-                    lambda acc, v: acc + v,
-                )
-                / F.lit(k)
-            ).alias("score"),
+            _sig_agreement("l.sig", "r.sig", k).alias("score"),
         )
         .filter(F.col("score") >= min_jaccard)
     )
@@ -249,18 +261,7 @@ def bucket_star_edges(
     two members of a bucket are joined through the representative; the
     per-edge Jaccard filter still prunes false bucket collisions).
     """
-    rows_per_band = k // bands
-    banded = signed.filter(F.col("sig").isNotNull()).select(
-        "mention_id",
-        "norm",
-        "sig",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.hash(F.slice("sig", b * rows_per_band + 1, rows_per_band)),
-            )
-        ).alias("band_id", "band_hash"),
-    )
+    banded = _banded(signed, bands, k)
     reps = banded.groupBy("band_id", "band_hash").agg(
         F.min_by(F.struct("mention_id", "norm", "sig"), "mention_id").alias("rep")
     )
@@ -277,14 +278,7 @@ def bucket_star_edges(
             F.col("mention_id").alias("b"),
             F.col("rep.norm").alias("norm_a"),
             F.col("norm").alias("norm_b"),
-            (
-                F.aggregate(
-                    F.zip_with("rep.sig", "sig", lambda x, y: (x == y).cast("int")),
-                    F.lit(0),
-                    lambda acc, v: acc + v,
-                )
-                / F.lit(k)
-            ).alias("score"),
+            _sig_agreement("rep.sig", "sig", k).alias("score"),
         )
         .filter(F.col("score") >= min_jaccard)
     )

@@ -13,21 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def partition_lineage(parsed: DataFrame, snapshot_id: int) -> DataFrame:
-    """Counts per explicit part_id (url-hash partition), map-side combined."""
-    return (
-        parsed.groupBy("part_id")
-        .agg(
-            F.count("*").alias("n_pages"),
-            F.count(F.when(F.col("error").isNull(), 1)).alias("n_parsed"),
-            F.count(F.when(F.col("error").isNotNull(), 1)).alias("n_errors"),
-            F.sum(F.coalesce(F.size("entries"), F.lit(0))).alias("n_entries"),
-        )
-        .withColumn("snapshot_id", F.lit(snapshot_id))
-        .withColumn("status", F.lit("done"))
-    )
-
-
 def error_histogram(parsed: DataFrame) -> DataFrame:
     return (
         parsed.filter(F.col("error_class").isNotNull())

@@ -24,7 +24,7 @@ import json
 import os
 import shutil
 from pathlib import Path
-from typing import Any, Optional
+from typing import Any, Callable, Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -48,15 +48,22 @@ def _fsync_replace(tmp: Path, final: Path) -> None:
         os.close(dfd)
 
 
-def write_snapshot(
+def _commit(
     df: DataFrame,
     root: str | Path,
     table: str,
     snapshot_id: int,
-    partition_by: Optional[list[str]] = None,
+    write: Callable[[DataFrame, Path], None],
+    fields: dict[str, Any],
     extra: Optional[dict[str, Any]] = None,
+    register: Optional[Callable[[], None]] = None,
 ) -> dict[str, Any]:
-    """Atomically commit ``df`` as snapshot ``snapshot_id`` of ``table``."""
+    """The commit protocol both writers share: ``write`` puts ``df``
+    under a fresh ``_tmp-<id>``, the data is os.replace'd into
+    ``snap-<id>``, ``register`` (if given) runs with the data in place,
+    then manifest and CURRENT swap in with fsync.  ``fields`` are the
+    writer-specific manifest entries; the row count is observed during
+    the write."""
     tdir = _table_dir(root, table)
     tdir.mkdir(parents=True, exist_ok=True)
     tmp = tdir / f"_tmp-{snapshot_id}"
@@ -67,26 +74,24 @@ def write_snapshot(
     # post-write re-read (at 100 TB that second scan of the triples
     # table per snapshot was the commit path's scale-killer)
     obs = Observation()
-    observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    writer = observed.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(str(tmp))
+    write(df.observe(obs, F.count(F.lit(1)).alias("n")), tmp)
     n_rows = int(obs.get["n"])
+    if final.exists():
+        shutil.rmtree(final)
+    os.replace(tmp, final)
+    if register is not None:
+        register()
+
     manifest = {
         "table": table,
         "snapshot_id": snapshot_id,
         "parent_snapshot_id": current_snapshot_id(root, table),
         "row_count": n_rows,
-        "partition_by": partition_by or [],
+        **fields,
         "schema": df.schema.jsonValue(),
     }
     if extra:
         manifest["extra"] = extra
-
-    if final.exists():
-        shutil.rmtree(final)
-    os.replace(tmp, final)
 
     mpath = tdir / f"manifest-{snapshot_id}.json"
     mtmp = tdir / f"_manifest-{snapshot_id}.json.tmp"
@@ -97,6 +102,28 @@ def write_snapshot(
     ctmp.write_text(str(snapshot_id))
     _fsync_replace(ctmp, tdir / "CURRENT")
     return manifest
+
+
+def write_snapshot(
+    df: DataFrame,
+    root: str | Path,
+    table: str,
+    snapshot_id: int,
+    partition_by: Optional[list[str]] = None,
+    extra: Optional[dict[str, Any]] = None,
+) -> dict[str, Any]:
+    """Atomically commit ``df`` as snapshot ``snapshot_id`` of ``table``."""
+
+    def write(observed: DataFrame, tmp: Path) -> None:
+        writer = observed.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(str(tmp))
+
+    return _commit(
+        df, root, table, snapshot_id, write,
+        {"partition_by": partition_by or []}, extra,
+    )
 
 
 def current_snapshot_id(root: str | Path, table: str) -> Optional[int]:
@@ -138,31 +165,6 @@ def snapshots_of(root: str | Path, table: str) -> list[int]:
     return sorted(ids)
 
 
-def write_bucketed_table(
-    df: DataFrame,
-    name: str,
-    path: str | Path,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sort: bool = True,
-    mode: str = "overwrite",
-) -> None:
-    """Catalog-bucketed parquet table for CO-LOCATED joins (K11 scale
-    path): every join or aggregation keyed on ``bucket_col`` between
-    tables bucketed the same way reads matching buckets side by side
-    with NO exchange — at 100 TB this removes the dominant shuffle from
-    repeated triple/node joins (tests/test_plans.py pins the
-    exchange-free plan).
-
-    Hash-directory bucketing (write_snapshot's partition_by) places
-    files; CATALOG bucketing additionally records the bucket spec so
-    Catalyst can elide the shuffle."""
-    writer = df.write.mode(mode).format("parquet").bucketBy(n_buckets, bucket_col)
-    if sort:
-        writer = writer.sortBy(bucket_col)
-    writer.option("path", str(path)).saveAsTable(name)
-
-
 def _catalog_name(root: str | Path, table: str, snapshot_id: int, staging: bool = False) -> str:
     """Deterministic session-catalog name for a committed bucketed table;
     the root-path hash keeps concurrent test roots from colliding."""
@@ -198,68 +200,44 @@ def write_snapshot_bucketed(
     rename, which is what lets the final CLUSTERED BY table re-point at
     them — then manifest and CURRENT swap in with fsync."""
     spark = df.sparkSession
-    tdir = _table_dir(root, table)
-    tdir.mkdir(parents=True, exist_ok=True)
-    tmp = tdir / f"_tmp-{snapshot_id}"
-    final = tdir / f"snap-{snapshot_id}"
-    if tmp.exists():
-        shutil.rmtree(tmp)
     stg = _catalog_name(root, table, snapshot_id, staging=True)
-    obs = Observation()
-    observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    spark.sql(f"DROP TABLE IF EXISTS {stg}")
-    try:
-        (
-            observed.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(n_buckets, bucket_col)
-            .sortBy(bucket_col)
-            .option("path", str(tmp))
-            .saveAsTable(stg)
-        )
-        n_rows = int(obs.get["n"])
-        if final.exists():
-            shutil.rmtree(final)
-        os.replace(tmp, final)
-    finally:
-        # external table: dropping removes metadata only, never the
-        # (already renamed) data files
+
+    def write(observed: DataFrame, tmp: Path) -> None:
         spark.sql(f"DROP TABLE IF EXISTS {stg}")
+        try:
+            (
+                observed.write.mode("overwrite")
+                .format("parquet")
+                .bucketBy(n_buckets, bucket_col)
+                .sortBy(bucket_col)
+                .option("path", str(tmp))
+                .saveAsTable(stg)
+            )
+        finally:
+            # external table: dropping removes metadata only, never the
+            # data files the commit renames into place
+            spark.sql(f"DROP TABLE IF EXISTS {stg}")
 
     name = _catalog_name(root, table, snapshot_id)
-    ddl = _bucket_ddl(df)
+    final = _table_dir(root, table) / f"snap-{snapshot_id}"
     create = (
-        f"CREATE TABLE {name} ({ddl}) USING parquet "
+        f"CREATE TABLE {name} ({_bucket_ddl(df)}) USING parquet "
         f"CLUSTERED BY (`{bucket_col}`) SORTED BY (`{bucket_col}`) "
         f"INTO {n_buckets} BUCKETS LOCATION '{final}'"
     )
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    spark.sql(create)
 
-    manifest = {
-        "table": table,
-        "snapshot_id": snapshot_id,
-        "parent_snapshot_id": current_snapshot_id(root, table),
-        "row_count": n_rows,
+    def register() -> None:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        spark.sql(create)
+
+    fields = {
         "partition_by": [],
         "bucket_by": bucket_col,
         "n_buckets": n_buckets,
         "catalog_table": name,
         "create_ddl": create,
-        "schema": df.schema.jsonValue(),
     }
-    if extra:
-        manifest["extra"] = extra
-
-    mpath = tdir / f"manifest-{snapshot_id}.json"
-    mtmp = tdir / f"_manifest-{snapshot_id}.json.tmp"
-    mtmp.write_text(json.dumps(manifest, indent=2))
-    _fsync_replace(mtmp, mpath)
-
-    ctmp = tdir / "_CURRENT.tmp"
-    ctmp.write_text(str(snapshot_id))
-    _fsync_replace(ctmp, tdir / "CURRENT")
-    return manifest
+    return _commit(df, root, table, snapshot_id, write, fields, extra, register)
 
 
 def read_snapshot_bucketed(

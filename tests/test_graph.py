@@ -666,6 +666,36 @@ def test_hits_bipartite_separates_hubs_from_authorities(spark):
     assert got["s1"][1] == got["s2"][1] > 0
 
 
+_DEGENERATE = {
+    "empty": [],
+    "self_loops": [("a", "a"), ("b", "b")],
+    "single_edge": [("a", "b")],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_DEGENERATE))
+@pytest.mark.parametrize("op", ["hits", "scc", "connected_components"])
+def test_iterative_operators_on_degenerate_edge_sets(spark, op, case):
+    from ffp_spark.cc import connected_components
+    from ffp_spark.graph import HITS_SCALE, hits, scc
+
+    pairs = _DEGENERATE[case]
+    e = _edges(spark, pairs)
+    loop_free = [(a, b) for a, b in pairs if a != b]
+    if op == "hits":
+        got = {r.node: (r.hub_q, r.auth_q) for r in hits(e).collect()}
+        eh, ea = _reference_hits(pairs, iters=3, scale=HITS_SCALE)
+        want = {v: (eh[v], ea[v]) for v in eh}
+    elif op == "scc":
+        # self-loops are dropped: a node with only a self-loop has no row
+        got = {r.node: r.scc_id for r in scc(e).collect()}
+        want = _tarjan_sccs(loop_free)
+    else:
+        got = {r.node_id: r.component_id for r in connected_components(e).collect()}
+        want = {b: a for a, b in loop_free} | {a: a for a, _ in loop_free}
+    assert got == want
+
+
 def _reference_sssp(wpairs, srcs, rounds):
     """Pure-Python fixed-round Bellman-Ford with min-weight parallel
     edge resolution."""

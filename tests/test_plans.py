@@ -111,27 +111,31 @@ def test_snapshot_commit_writes_without_rescan(spark, tmp_path):
 def test_bucketed_tables_join_without_exchange(spark, tmp_path):
     # catalog bucketing co-locates join keys: the subj-keyed self-join
     # and the subj aggregation read matching buckets with NO shuffle
-    from ffp_spark.snapshots import write_bucketed_table
+    from ffp_spark.snapshots import read_snapshot_bucketed, write_snapshot_bucketed
 
     t = spark.range(10_000).selectExpr(
         "concat('s', id % 500) AS subj", "concat('o', id) AS obj"
     )
-    write_bucketed_table(t, "tb_a", tmp_path / "tb_a", "subj", n_buckets=8)
-    write_bucketed_table(t, "tb_b", tmp_path / "tb_b", "subj", n_buckets=8)
+    names = [
+        write_snapshot_bucketed(t, tmp_path, tb, 1, "subj", n_buckets=8)["catalog_table"]
+        for tb in ("tb_a", "tb_b")
+    ]
+    tb_a = read_snapshot_bucketed(spark, tmp_path, "tb_a")
+    tb_b = read_snapshot_bucketed(spark, tmp_path, "tb_b")
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("tb_a").join(spark.table("tb_b"), "subj")
+        joined = tb_a.join(tb_b, "subj")
         joined.collect()
         plan = _plan(joined)
         assert "Exchange" not in plan, plan
-        agg = spark.table("tb_a").groupBy("subj").count()
+        agg = tb_a.groupBy("subj").count()
         agg.collect()
         assert "Exchange" not in _plan(agg), _plan(agg)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS tb_a")
-        spark.sql("DROP TABLE IF EXISTS tb_b")
+        for name in names:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_ivf_assignment_is_projection_only(spark):
@@ -229,7 +233,7 @@ def test_bucketed_captures_diff_without_exchange(spark, tmp_path):
     # the url key full-outer-join with NO shuffle (capture_delta's
     # docstring promise, verified against the executed plan)
     from ffp_spark.frontier import capture_delta
-    from ffp_spark.snapshots import write_bucketed_table
+    from ffp_spark.snapshots import read_snapshot_bucketed, write_snapshot_bucketed
 
     url = "concat('https://h', id % 97, '.example/p/', id) AS url"
     old_caps = spark.range(0, 2_000).selectExpr(
@@ -240,12 +244,17 @@ def test_bucketed_captures_diff_without_exchange(spark, tmp_path):
         "concat('sha1:', CASE WHEN id % 5 = 0 THEN (id + 1) % 37"
         " ELSE id % 37 END) AS digest",
     )
-    write_bucketed_table(old_caps, "cap_old", tmp_path / "cap_old", "url", n_buckets=8)
-    write_bucketed_table(new_caps, "cap_new", tmp_path / "cap_new", "url", n_buckets=8)
+    names = [
+        write_snapshot_bucketed(caps, tmp_path, tb, 1, "url", n_buckets=8)["catalog_table"]
+        for caps, tb in ((old_caps, "cap_old"), (new_caps, "cap_new"))
+    ]
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        d = capture_delta(spark.table("cap_old"), spark.table("cap_new"))
+        d = capture_delta(
+            read_snapshot_bucketed(spark, tmp_path, "cap_old"),
+            read_snapshot_bucketed(spark, tmp_path, "cap_new"),
+        )
         counts = {r.status: r.n for r in d.groupBy("status").agg(
             F.count("*").alias("n")).collect()}
         assert set(counts) == {"added", "removed", "changed", "unchanged"}
@@ -253,5 +262,37 @@ def test_bucketed_captures_diff_without_exchange(spark, tmp_path):
         assert "Exchange" not in plan, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS cap_old")
-        spark.sql("DROP TABLE IF EXISTS cap_new")
+        for name in names:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+@pytest.mark.parametrize("banding", ["candidate_pairs", "bucket_star_edges"])
+def test_band_join_shuffles_and_drops_signatures_before_dedup(spark, banding):
+    # both banding paths: the band join is a shuffled hash join even on
+    # an input small enough to broadcast, and the signature arrays are
+    # consumed by the score before the (a, b) dedup exchange
+    import re
+
+    from ffp_spark import linking
+
+    rows = [("m0", "john smith"), ("m1", "jon smith"), ("m2", "alice jones"),
+            ("m3", "alice jone"), ("m4", "bob")]
+    signed = linking.with_signatures(
+        spark.createDataFrame(rows, "mention_id string, norm string")
+    )
+    df = getattr(linking, banding)(signed)
+    assert sorted((r.a, r.b) for r in df.collect()) == [("m0", "m1"), ("m2", "m3")]
+    plan = _plan(df)
+    assert "ShuffledHashJoin [band_id" in plan, plan
+    assert "BroadcastHashJoin" not in plan and "BroadcastExchange" not in plan, plan
+    lines = plan.splitlines()
+    dedup = [
+        i for i, line in enumerate(lines)
+        if re.search(r"Exchange hashpartitioning\(a#\d+, b#\d+,", line)
+    ]
+    assert dedup, plan
+    for i in dedup:
+        # the partial dedup below the exchange carries the output
+        # columns only: no signature array, however it is named
+        carried = re.findall(r"partial_first\((\w+)#", lines[i + 1])
+        assert carried == ["norm_a", "norm_b", "score"], lines[i + 1]

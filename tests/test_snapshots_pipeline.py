@@ -264,3 +264,34 @@ def test_changelog_history_intervals_chain_per_key(spark):
         (1, 400): (400, None),
         (2, 130): (130, None),
     }
+
+
+def test_no_library_operator_sets_session_conf():
+    # session conf is global to every thread of the session, and the
+    # commit and analytics pools submit jobs concurrently: an operator
+    # that sets it leaks the value into another thread's jobs
+    from pathlib import Path
+
+    import ffp_spark
+
+    pkg = Path(ffp_spark.__file__).parent
+    hits = [
+        f"{path.relative_to(pkg)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if ".conf.set(" in line
+    ]
+    assert hits == []
+
+
+def test_warm_python_workers_failure_leaves_session_usable(spark, monkeypatch):
+    from ffp_spark import pipeline
+
+    def broken_range(*args, **kwargs):
+        raise RuntimeError("no ffp_spark on the worker")
+
+    monkeypatch.setattr(spark, "_ffp_workers_warm", False, raising=False)
+    monkeypatch.setattr(spark, "range", broken_range)
+    with pytest.warns(RuntimeWarning, match="no ffp_spark on the worker"):
+        pipeline.warm_python_workers(spark)
+    assert spark._ffp_workers_warm is False
